@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Machine-weather evidence stamped into every benchmark artifact: the
   * round-9 driver run was distorted by co-resident load and nothing in the
@@ -42,18 +41,7 @@ object Bench {
     val loadBefore = LoadEvidence.loadavg
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // replay-harness pin: the engine default for streaming state width is
-      // cluster parallelism (scale-safe); the measured tiny-replay optimum
-      // is 4 (see EventsStream.statePartitions) and belongs to the harness
-      .config("graft.stream.statePartitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(cpus.toInt)
     // Warm-up pass at the benchmark scale factor: JIT-compiles each query's
     // generated code with enough iterations to reach C2 (a tiny-SF warmup
     // never crosses the compile thresholds). Caches populated by the warmup

@@ -4,9 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Validated parsing for the engine's session confs.
   *
-  * Two conf classes, two failure disciplines (the q138 `graft.pr.ckptEvery`
-  * precedent, hardened repo-wide after ADVICE r16 flagged the raw-parse
-  * class on `graft.assets.prune`):
+  * Two conf classes, two failure disciplines (hardened repo-wide after
+  * ADVICE r16 flagged the raw-parse class on `graft.assets.prune`):
   *
   *  - STRATEGY/SEMANTIC confs (thresholds, caps, feature gates) fail
   *    LOUDLY on an unparseable value — a typo must surface as a clear

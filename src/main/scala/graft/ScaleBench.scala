@@ -187,30 +187,16 @@ object ScaleBench {
     tiled.write.mode("overwrite").parquet(s"$out/$table.parquet")
   }
 
-  private[graft] def session(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // replay-harness pin: the engine default for streaming state width is
-      // cluster parallelism (scale-safe); the measured tiny-replay optimum
-      // is 4 (see EventsStream.statePartitions) and belongs to the harness
-      .config("graft.stream.statePartitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the scale probes measure the BUILD plans: with the persisted asset
-    // layer on, q36/q38/q101/q102's pipelines would collapse to a parquet
-    // scan of whichever JVM built the artifact first, and the slope rows
-    // would grade artifact I/O instead of the signature→band→verify plan
-    spark.conf.set(graft.assets.AssetStore.DirConf, "")
-    // if events carries TIMESTAMP(NANOS), read it as raw long so the tiled
-    // copy round-trips as plain INT64 nanos; Tables.normalizeEventTs probes
-    // the tiled layout either way (micros layouts are unaffected)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark
-  }
+  // the scale probes measure the BUILD plans: with the persisted asset
+  // layer on, q36/q38/q101/q102's pipelines would collapse to a parquet
+  // scan of whichever JVM built the artifact first, and the slope rows
+  // would grade artifact I/O instead of the signature→band→verify plan.
+  // If events carries TIMESTAMP(NANOS), read it as raw long so the tiled
+  // copy round-trips as plain INT64 nanos; Tables.normalizeEventTs probes
+  // the tiled layout either way (micros layouts are unaffected).
+  private[graft] def session(cpus: String): SparkSession =
+    Harness.session(cpus.toInt, graft.assets.AssetStore.DirConf -> "",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
   /** Materialize the `tiles`×`src` decorrelated dataset at `out` (reused if
     * the marker file already exists — delete the dir to re-tile). */

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -20,21 +19,10 @@ object Verify {
     def selected(name: String): Boolean =
       only.forall(_.exists(name.contains))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // replay-harness pin: the engine default for streaming state width is
-      // cluster parallelism (scale-safe); the measured tiny-replay optimum
-      // is 4 (see EventsStream.statePartitions) and belongs to the harness
-      .config("graft.stream.statePartitions", "4")
-      // DuckDB/pyarrow-friendly timestamps in the dumped result parquet
-      // (default INT96 is a legacy type some readers mis-handle).
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // DuckDB/pyarrow-friendly timestamps in the dumped result parquet
+    // (default INT96 is a legacy type some readers mis-handle).
+    val spark = Harness.session(cpus.toInt,
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
     // The correctness gate runs the STRONG form of conf-gated proofs:
     // q152 carries the batch-rebuild-equality twin and its n_mismatch
     // column here (bench leaves the proof off — the production shape).

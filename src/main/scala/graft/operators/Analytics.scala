@@ -483,36 +483,6 @@ object Analytics {
   val PrIters = 8
   val PrScale = 1000000000000L // 1e12: total rank mass in fixed-point longs
 
-  /** q138: PageRank over the customer↔supplier trade graph — the iterative
-    * graph-ranking operator (Page et al. 1999; the canonical "who matters in
-    * this network" pass over entity graphs a pipeline extracts). Nodes are
-    * customers (key·2) and suppliers (key·2+1); a distinct edge links each
-    * pair that traded (orders ⋈ lineitem), materialized in BOTH directions so
-    * the bipartite graph is strongly connected per component (no dangling
-    * mass). [[PrIters]] power iterations with damping 0.85.
-    *
-    * Numerics: rank is a FIXED-POINT long ([[PrScale]] = total mass), every
-    * step is integer arithmetic (`div`), so cross-partition sum order cannot
-    * perturb a bit — the oracle's unrolled CTEs ([[pageRankSql]]) reproduce
-    * it exactly, the same determinism contract as q116/q130.
-    *
-    * Scale plan: the degree-annotated edge list is built once, pinned to a
-    * size-derived src-clustered layout and checkpointed (the
-    * `persist(edges)` every production PageRank does — see [[prEdgeFrames]]
-    * / [[prNoAqe]] for why the layout must be pinned outside AQE); each
-    * iteration is then ONE equi-join (node-sized rank table ⋈ edge list on
-    * src, edge side exchange-free and sort-free against the checkpoint) +
-    * ONE map-side-combinable hash aggregate on dst, state checkpointed per
-    * block so the plan stays iteration-shallow (q118's Lloyd-loop pattern).
-    * Nothing driver-sized: the only driver scalars are the pair and node
-    * counts. At 100 TB the edge list is
-    * bucketed by src once and every iteration's join co-locates against it —
-    * DEMONSTRATED, not just named: BucketingSpec's q138 test runs one
-    * iteration against a src-bucketed edge table with broadcast disabled
-    * (the at-scale regime) and asserts zero src exchanges, the src exchange
-    * reappearing in the unbucketed control, and bit-identical rank values
-    * through both layouts.
-    */
   /** Run `f` with AQE disabled on this session, restoring the caller's
     * setting afterwards (serialized on the session — concurrent query
     * builders on one session must not interleave set/restore). Used ONLY
@@ -533,7 +503,15 @@ object Analytics {
     * caller's settings afterwards. Serialized on the session object so two
     * concurrent query builders on one session cannot interleave set/restore
     * (the ADVICE-r17 withStatePartitions hazard, fixed at the shared
-    * helper). */
+    * helper).
+    *
+    * The session monitor is held across ALL of `f`, which for
+    * `EventsStream.withStatePartitions` is a whole streaming run (start →
+    * processAllAvailable → stop): any other thread entering this helper
+    * waits for the stream to finish. Code that runs on a stream's own
+    * threads (a `foreachBatch` body, a sink) must therefore never call
+    * this helper: the batch thread would wait on the lock held by the
+    * thread blocked in processAllAvailable — a self-deadlock. */
   private[graft] def withSessionConf[A](spark: SparkSession)(
       kvs: (String, String)*)(f: => A): A = spark.synchronized {
     val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
@@ -544,23 +522,20 @@ object Analytics {
     }
   }
 
-  /** q138's edge-state build frames, pre-checkpoint — split out so the
-    * evidence dump ([[graft.DumpPr138]]) can explain the build phase that
-    * the checkpoint hides from ExplainMain. Returns (checkpointed distinct
-    * pair set, degree-annotated edge frame NOT yet checkpointed, pinned
-    * width). The caller must free the pair checkpoint once the edge frame
-    * is materialized.
+  /** q138's materialized edge state: (degree-annotated edges checkpointed
+    * src-clustered and src-sorted, checkpointed node set, node count, pinned
+    * width). Both checkpoints are taken with AQE off so LogicalRDD records
+    * the layout — see [[prNoAqe]]. Every node has outdegree ≥ 1 (edges are
+    * symmetric), so distinct src IS the node set: an exchange-free
+    * partial+final aggregate over the src-clustered checkpoint, materialized
+    * ONCE for both the mass denominator and the rank seed.
     *
-    * The width (conf `graft.pr.parts`) is derived from the MEASURED pair
-    * count the same way AQE sizes coalesced partitions — edge bytes over
-    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`, clamped to the
-    * cluster's default parallelism — because the checkpoint boundary is
-    * exactly where AQE's own sizing cannot reach (guide §2: derive
-    * partitioning from input size, not from a constant tuned to local mode
-    * or to one cluster). At sf0.1 that is 1 partition (~6 MB of edges); at
+    * The width is [[graft.Widths.forBytes]] of the MEASURED edge bytes,
+    * because the checkpoint boundary is exactly where AQE's own sizing
+    * cannot reach. At sf0.1 that is the floor of 4 (~6 MB of edges); at
     * 100 TB it is edge-bytes/advisory capped at cluster parallelism. */
-  private[graft] def prEdgeFrames(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, Int) = {
+  private def prEdgeState(spark: SparkSession, dir: String)
+      : (DataFrame, DataFrame, Long, Int) = {
     val o = Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey"))
     val l = Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey"))
     // the distinct pair set is checkpointed FIRST so its row count can size
@@ -570,19 +545,8 @@ object Analytics {
       .select((col("o_custkey") * 2).as("cn"), (col("l_suppkey") * 2 + 1).as("sn"))
       .distinct()
       .localCheckpoint()
-    val nPairs = pairs.count()
-    val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"))
-    // 2 directions × 3 longs ≈ 32 B per unsafe edge row. The lower clamp is
-    // a minimum-parallelism floor (the same idea as
-    // spark.sql.files.minPartitionNum on scans): the iteration stages are
-    // latency-bound at small edge volumes, and sf0.1 measured width 1
-    // (pure size-derived) at 4.6 s vs 3.2 s at the floor of 4, with the
-    // curve flat from 4 to 8 and the session default (32) back at 4.5+ s.
-    val defPar = spark.sparkContext.defaultParallelism.toLong
-    val derived = math.max(math.min(defPar, 4L), math.min(defPar,
-      (2L * nPairs * 32L + advisory - 1L) / advisory)).toInt
-    val parts = graft.GraftConf.int(spark, "graft.pr.parts", derived)
+    // 2 directions × 3 longs ≈ 32 B per unsafe edge row
+    val parts = graft.Widths.forBytes(spark, 2L * pairs.count() * 32L)
     // Both edge directions from ONE pass over the distinct pairs (explode of
     // a 2-struct array), not a self-union (the r17 lesson: the union's two
     // branches re-ran the distinct's reduce-side aggregate). The explicit
@@ -595,22 +559,10 @@ object Analytics {
         struct(col("sn").as("src"), col("cn").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .repartition(parts, col("src"))
-    val wDeg = org.apache.spark.sql.expressions.Window.partitionBy(col("src"))
-    (pairs, edges.withColumn("outdeg", count(lit(1)).over(wDeg)), parts)
-  }
-
-  /** q138's materialized edge state: (degree-annotated edges checkpointed
-    * src-clustered and src-sorted, checkpointed node set, node count). Both
-    * checkpoints are taken with AQE off so LogicalRDD records the layout —
-    * see [[prNoAqe]]. Every node has outdegree ≥ 1 (edges are symmetric),
-    * so distinct src IS the node set: an exchange-free partial+final
-    * aggregate over the src-clustered checkpoint, materialized ONCE for
-    * both the mass denominator and the rank seed. */
-  private[graft] def prEdgeState(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, Long, Int) = {
-    val (pairs, edgesDegFrame, parts) = prEdgeFrames(spark, dir)
+      .withColumn("outdeg", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
     val (edgesDeg, nodes) = prNoAqe(spark) {
-      val ed = edgesDegFrame.localCheckpoint()
+      val ed = edges.localCheckpoint()
       (ed, ed.select(col("src")).distinct().localCheckpoint())
     }
     TextOps.freeMaterialized(pairs)
@@ -618,10 +570,9 @@ object Analytics {
     (edgesDeg, nodes, n, parts)
   }
 
-  /** One q138 power-iteration step — shared by the loop and the evidence
-    * dump so the dumped block plan is the production plan. */
-  private[graft] def prIterStep(edgesDeg: DataFrame, rank: DataFrame,
-                                base: Long): DataFrame =
+  /** One q138 power-iteration step. */
+  private def prIterStep(edgesDeg: DataFrame, rank: DataFrame,
+                         base: Long): DataFrame =
     edgesDeg.join(rank, edgesDeg("src") === rank("node"))
       .select(col("dst"), expr("rank div outdeg").as("contrib"))
       .groupBy(col("dst"))
@@ -629,6 +580,41 @@ object Analytics {
       .select(col("dst").as("node"),
         (lit(base) + expr("(s * 85) div 100")).as("rank"))
 
+  /** q138 iterations per checkpointed block: 4 was the r15 measured optimum
+    * and r18 re-measured 8 no better (one deep block re-plans a larger join
+    * tree than it saves in checkpoints). */
+  private val PrCkptEvery = 4
+
+  /** q138: PageRank over the customer↔supplier trade graph — the iterative
+    * graph-ranking operator (Page et al. 1999; the canonical "who matters in
+    * this network" pass over entity graphs a pipeline extracts). Nodes are
+    * customers (key·2) and suppliers (key·2+1); a distinct edge links each
+    * pair that traded (orders ⋈ lineitem), materialized in BOTH directions so
+    * the bipartite graph is strongly connected per component (no dangling
+    * mass). [[PrIters]] power iterations with damping 0.85.
+    *
+    * Numerics: rank is a FIXED-POINT long ([[PrScale]] = total mass), every
+    * step is integer arithmetic (`div`), so cross-partition sum order cannot
+    * perturb a bit — the oracle's unrolled CTEs ([[pageRankSql]]) reproduce
+    * it exactly, the same determinism contract as q116/q130.
+    *
+    * Scale plan: the degree-annotated edge list is built once, pinned to a
+    * size-derived src-clustered layout and checkpointed (the
+    * `persist(edges)` every production PageRank does — see [[prEdgeState]]
+    * / [[prNoAqe]] for why the layout must be pinned outside AQE); each
+    * iteration is then ONE equi-join (node-sized rank table ⋈ edge list on
+    * src, edge side exchange-free and sort-free against the checkpoint) +
+    * ONE map-side-combinable hash aggregate on dst, state checkpointed per
+    * block so the plan stays iteration-shallow (q118's Lloyd-loop pattern).
+    * Nothing driver-sized: the only driver scalars are the pair and node
+    * counts. At 100 TB the edge list is
+    * bucketed by src once and every iteration's join co-locates against it —
+    * DEMONSTRATED, not just named: BucketingSpec's q138 test runs one
+    * iteration against a src-bucketed edge table with broadcast disabled
+    * (the at-scale regime) and asserts zero src exchanges, the src exchange
+    * reappearing in the unbucketed control, and bit-identical rank values
+    * through both layouts.
+    */
   def pageRank(spark: SparkSession, dir: String): DataFrame = {
     val (edgesDeg, nodes, n, parts) = prEdgeState(spark, dir)
     val r0 = PrScale / n
@@ -638,25 +624,12 @@ object Analytics {
     // so iteration 1 joins exchange-free like every later iteration
     var rank = nodes.select(col("src").as("node"))
       .withColumn("rank", lit(r0))
-    // Checkpoint every `ckptEvery`-th iteration, not every one, so lineage
-    // depth stays bounded (the q118 Lloyd-loop concern) without paying a
-    // materialization per step. Since r18 the edge side of every iteration
-    // in a block is the bare checkpoint scan (no exchange, no sort — see
-    // prNoAqe), so the block's only exchanges are the node-sized rank
-    // aggregates. Conf `graft.pr.ckptEvery` tunes the block size; 4 was the
-    // r15 measured optimum and r18 re-measured 8 no better (one deep block
-    // re-plans a larger join tree than it saves in checkpoints).
-    val ckptEvery = spark.conf.getOption("graft.pr.ckptEvery")
-      .map { v =>
-        val n = try v.toInt catch { case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            s"graft.pr.ckptEvery must be a positive integer, got '$v'") }
-        // 0 would divide-by-zero the block test; a negative value would
-        // silently disable every intermediate checkpoint (unbounded lineage
-        // — the exact concern this block size exists to bound)
-        require(n >= 1, s"graft.pr.ckptEvery must be >= 1, got $n")
-        n
-      }.getOrElse(4)
+    // Checkpoint every [[PrCkptEvery]]-th iteration, not every one, so
+    // lineage depth stays bounded (the q118 Lloyd-loop concern) without
+    // paying a materialization per step. Since r18 the edge side of every
+    // iteration in a block is the bare checkpoint scan (no exchange, no sort
+    // — see prNoAqe), so the block's only exchanges are the node-sized rank
+    // aggregates.
     // The iteration blocks EXECUTE (at their block-end checkpoints) with the
     // session shuffle width lowered to the edge state's pinned width: every
     // rank aggregate's exchange is then born hash(dst, parts), which is
@@ -669,7 +642,7 @@ object Analytics {
     withSessionConf(spark)("spark.sql.shuffle.partitions" -> parts.toString) {
       for (k <- 1 to PrIters) {
         val it = prIterStep(edgesDeg, rank, base)
-        rank = if (k % ckptEvery == 0 || k == PrIters) it.localCheckpoint() else it
+        rank = if (k % PrCkptEvery == 0 || k == PrIters) it.localCheckpoint() else it
       }
     }
     rank.select(col("node"), col("rank").as("rank_fp"),

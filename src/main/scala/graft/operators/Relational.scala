@@ -938,18 +938,16 @@ object Relational {
     */
   def fuzzyCandidates(spark: SparkSession, dir: String): DataFrame = {
     val maxBlock = graft.GraftConf.int(spark, "graft.fuzzy.maxBlock", 64)
-    val window = graft.GraftConf.int(spark, "graft.fuzzy.window", FuzzyWindow)
     fuzzyCandidatesOf(Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_name"), col("c_nationkey"), col("c_mktsegment")),
-      maxBlock, window)
+      maxBlock)
   }
 
   /** Core of q107 over an arbitrary (c_custkey, c_name, c_nationkey,
     * c_mktsegment) relation — exposed so DedupSpec can bound the candidate
     * volume under a synthetic hot name independently of the test tables.
     */
-  def fuzzyCandidatesOf(c: DataFrame, maxBlock: Int,
-                        window: Int = FuzzyWindow): DataFrame = {
+  def fuzzyCandidatesOf(c: DataFrame, maxBlock: Int): DataFrame = {
     // distinct hashes of the 0/1/2-deletion neighborhood in ONE native pass
     // (SymDeleteHashes) — the composed transform/substr/concat construction
     // built ~L²/2 variant strings per row through interpreted CodegenFallback
@@ -972,7 +970,7 @@ object Relational {
     // discipline the levenshtein check applies to the name.
     val keyedAll = c.select(col("c_custkey"), col("c_nationkey"),
         col("c_mktsegment"),
-        explode(graft.functions.SymDeleteHashes(col("c_name"), window)).as("vhash"))
+        explode(graft.functions.SymDeleteHashes(col("c_name"), FuzzyWindow)).as("vhash"))
       .select(col("c_custkey"),
         xxhash64(col("vhash"), col("c_nationkey"), col("c_mktsegment")).as("bkey"))
     // Blocks materialize as bounded member lists in ONE exchange: rank rows

@@ -2880,21 +2880,14 @@ object TextOps {
     // state, so a corpus-scale width only buys per-round task-scheduling
     // overhead, and AQE's per-round stage re-planning was the measured
     // dominant fixed cost of the loop (8 rounds × replan ≈ 0.1 s each at
-    // sf0.1; warm q134 1.48 → 1.25 s, q135 1.84 → 1.53 s). The width is the
-    // q138 derivation — state bytes over advisoryPartitionSizeInBytes,
-    // clamped to a min-parallelism floor and cluster parallelism (conf
-    // `graft.bpe.parts`) — i.e. the sizing AQE would have picked, computed
-    // once from the measured vocabulary instead of re-planned per round.
+    // sf0.1; warm q134 1.48 → 1.25 s, q135 1.84 → 1.53 s). The width is
+    // [[graft.Widths.forBytes]] of the vocabulary state — the sizing AQE
+    // would have picked, computed once from the measured vocabulary instead
+    // of re-planned per round.
     // Counts are exact integer sums, so the merge list is
     // partitioning-independent (the oracle re-proves it every run).
-    val nV = vs.count()
-    val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"))
-    val defPar = spark.sparkContext.defaultParallelism.toLong
     // ~64 B per (word, freq, syms) vocabulary row
-    val derived = math.max(math.min(defPar, 4L), math.min(defPar,
-      (nV * 64L + advisory - 1L) / advisory)).toInt
-    val bpeParts = graft.GraftConf.int(spark, "graft.bpe.parts", derived)
+    val bpeParts = graft.Widths.forBytes(spark, vs.count() * 64L)
     graft.operators.Analytics.withSessionConf(spark)(
         "spark.sql.shuffle.partitions" -> bpeParts.toString,
         "spark.sql.adaptive.enabled" -> "false") {

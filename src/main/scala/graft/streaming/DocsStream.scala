@@ -313,7 +313,7 @@ object DocsStream {
     // count (graft.stream.statePartitions) like every EventsStream query —
     // unlowered it inherited the session's batch shuffle width and paid a
     // per-batch state commit/reload per partition for a ledger of a few
-    // thousand booleans (the ProfStream breakdown, OPTIMIZATION_r17.md)
+    // thousand booleans (the per-batch breakdown in OPTIMIZATION_r17.md)
     EventsStream.withStatePartitions(spark) {
       val q = streamingIncrementalNearDedupOf(spark, changed, idx)
         .writeStream.format("memory").queryName(name).outputMode("append")

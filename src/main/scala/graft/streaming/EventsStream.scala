@@ -46,7 +46,7 @@ object EventsStream {
     * replay suites, which run under several values).
     *
     * The replay-scale value (4) was measured in the round-17 optimization
-    * pass with the StreamingQueryProgress breakdown (ProfStream): the
+    * pass with the StreamingQueryProgress breakdown: the
     * per-batch state commit/reload walks every store instance (stores ×
     * partitions files per batch — the interval join runs FOUR stores), so
     * at replay scale the wall cost of BOTH the data batch and the
@@ -59,7 +59,7 @@ object EventsStream {
     * Since r18 the DEFAULT is the cluster's own parallelism (VERDICT r17
     * #7): a deployment that never sets the conf gets state partitioning
     * sized like any shuffle, and it is the REPLAY HARNESS entry points
-    * (Bench / Verify / ScaleBench and the profiling mains) that pin the
+    * (every session built by [[graft.Harness.session]]) that pin the
     * measured replay value 4 explicitly — a tiny-state constant belongs to
     * the harness, not to the engine's default. Results are
     * partitioning-independent (spec-pinned by the replay suites, which run
@@ -437,17 +437,22 @@ object EventsStream {
     val sPath = new org.apache.hadoop.fs.Path(staging)
     val aside = new org.apache.hadoop.fs.Path(target + ".old")
     val fs = tPath.getFileSystem(conf)
-    if (fs.exists(aside)) fs.delete(aside, true)
     val hadPrev = fs.exists(tPath)
-    if (hadPrev && !fs.rename(tPath, aside))
-      throw new java.io.IOException(s"failed to set aside $target")
+    // a stale aside is cleared only when a live target replaces it; with the
+    // target missing (a crash between the two renames) the aside IS the
+    // last generation and must survive until the new one is in place
+    if (hadPrev) {
+      if (fs.exists(aside)) fs.delete(aside, true)
+      if (!fs.rename(tPath, aside))
+        throw new java.io.IOException(s"failed to set aside $target")
+    }
     if (!fs.rename(sPath, tPath)) {
       // put the previous generation back before failing — the caller must
       // never observe a missing target with a live staging dir
       if (hadPrev) fs.rename(aside, tPath)
       throw new java.io.IOException(s"failed to publish $staging over $target")
     }
-    if (hadPrev) fs.delete(aside, true)
+    if (fs.exists(aside)) fs.delete(aside, true)
   }
 
   def foreachBatchUpsert(spark: SparkSession, dir: String, targetDir: String): DataFrame = {
@@ -532,6 +537,55 @@ object EventsStream {
       .orderBy(col("day"))
   }
 
+  /** A fresh run directory under `parent` for a `foreachBatch` sink target
+    * that must outlive its own query (q132/q145 return a frame that reads it
+    * lazily), sweeping what earlier runs left behind.
+    *
+    * Run dirs are namespaced per-JVM (`pid_<pid>/run…`) and cleanup only
+    * sweeps namespaces whose OWNING PROCESS IS DEAD — never an age
+    * heuristic: a concurrent JVM whose run stalls past any mtime horizon
+    * (GC pause, suspended bench) must not lose its live target mid-stream,
+    * and a caller may still read a target returned hours ago. ProcessHandle
+    * liveness is the ownership oracle; our own namespace is reused across
+    * calls in this JVM. A namespace whose pid IS live is deleted only on
+    * positive proof of pid recycling: the live process STARTED after the
+    * namespace was last written, so it cannot be the writer (the true owner
+    * died first and froze the mtime). The age fallback covers ONLY dirs
+    * with no adjudicable owner — pre-namespace `run*` dirs and malformed
+    * names — and is generous (days): it only has to bound /tmp growth.
+    */
+  private def scratchTarget(parent: String): String = {
+    val root = java.nio.file.Paths.get(parent)
+    java.nio.file.Files.createDirectories(root)
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete(); ()
+    }
+    val staleAfterMs = 2L * 24 * 3600 * 1000
+    val now = System.currentTimeMillis()
+    val myPid = ProcessHandle.current.pid
+    Option(root.toFile.listFiles()).getOrElse(Array.empty)
+      .filter { d =>
+        if (d.getName.startsWith("pid_"))
+          d.getName.stripPrefix("pid_").toLongOption match {
+            case Some(pid) if pid == myPid => false     // always keep our own
+            case Some(pid) =>
+              val h = ProcessHandle.of(pid)
+              if (!(h.isPresent && h.get.isAlive)) true // owner is dead
+              else {                                    // live: recycled iff
+                val started = h.get.info.startInstant   //  born after the dir
+                started.isPresent &&                    //  stopped changing
+                  started.get.toEpochMilli > d.lastModified()
+              }
+            case None => true   // malformed namespace: nobody owns it
+          }
+        else now - d.lastModified() > staleAfterMs      // legacy run* dirs
+      }
+      .foreach(rm)
+    val mine = root.resolve(s"pid_$myPid")
+    java.nio.file.Files.createDirectories(mine)
+    java.nio.file.Files.createTempDirectory(mine, "run").toString
+  }
+
   /** q132: the PRODUCTION form of q131 — the same KMV distinct-count
     * Aggregator in watermarked UPDATE mode with a `foreachBatch` keyed
     * upsert sink (the q23-era overwrite-by-key pattern). q131's
@@ -562,22 +616,7 @@ object EventsStream {
   def streamingKmvUpdate(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.PortableHash
     val kmv = udaf(graft.functions.KmvSketch)
-    // self-cleaning managed parent: a slope-guard sweep runs this query
-    // many times, and each run's target must outlive its own session (the
-    // returned frame reads it lazily) — so instead of leaking a temp dir
-    // per invocation, stale sibling runs older than 2h are removed here
-    val parent = java.nio.file.Paths.get("/tmp/graft_kmv_upsert")
-    java.nio.file.Files.createDirectories(parent)
-    val cutoff = System.currentTimeMillis() - 2L * 3600 * 1000
-    Option(parent.toFile.listFiles()).getOrElse(Array.empty)
-      .filter(_.lastModified() < cutoff)
-      .foreach { d =>
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete(); ()
-        }
-        rm(d)
-      }
-    val target = java.nio.file.Files.createTempDirectory(parent, "run").toString
+    val target = scratchTarget("/tmp/graft_kmv_upsert")
     val stream = Tables.eventsStream(spark, dir)
       // watermarks require TIMESTAMP event time (UTC session: same instant)
       .withColumn("ts", col("ts").cast("timestamp"))
@@ -663,49 +702,7 @@ object EventsStream {
     * over events).
     */
   def streamingTopK(spark: SparkSession, dir: String): DataFrame = {
-    // Run dirs are namespaced per-JVM (`pid_<pid>/run…`) and cleanup only
-    // sweeps namespaces whose OWNING PROCESS IS DEAD — never an age
-    // heuristic: a concurrent JVM whose run stalls past any mtime horizon
-    // (GC pause, suspended bench) must not lose its live leaderboard
-    // target mid-stream. ProcessHandle liveness is the ownership oracle;
-    // our own namespace is reused across calls in this JVM.
-    val parent = java.nio.file.Paths.get("/tmp/graft_topk_upsert")
-    java.nio.file.Files.createDirectories(parent)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete(); ()
-    }
-    // Age fallback ONLY for dirs with no adjudicable owner: legacy
-    // pre-namespace `run*` dirs and malformed names. Generous (days, not
-    // minutes) — it only has to bound /tmp growth, never race a live run.
-    // A namespace whose pid IS live is deleted only on positive proof of
-    // pid recycling: the live process STARTED after the namespace was last
-    // written, so it cannot be the writer (the true owner died first and
-    // froze the mtime). Age alone is never grounds to delete a live pid's
-    // namespace — a multi-day run must not lose its leaderboard target.
-    val staleAfterMs = 2L * 24 * 3600 * 1000
-    val now = System.currentTimeMillis()
-    val myPid = ProcessHandle.current.pid
-    Option(parent.toFile.listFiles()).getOrElse(Array.empty)
-      .filter { d =>
-        if (d.getName.startsWith("pid_"))
-          d.getName.stripPrefix("pid_").toLongOption match {
-            case Some(pid) if pid == myPid => false     // always keep our own
-            case Some(pid) =>
-              val h = ProcessHandle.of(pid)
-              if (!(h.isPresent && h.get.isAlive)) true // owner is dead
-              else {                                    // live: recycled iff
-                val started = h.get.info.startInstant   //  born after the dir
-                started.isPresent &&                    //  stopped changing
-                  started.get.toEpochMilli > d.lastModified()
-              }
-            case None => true   // malformed namespace: nobody owns it
-          }
-        else now - d.lastModified() > staleAfterMs      // legacy run* dirs
-      }
-      .foreach(rm)
-    val mine = parent.resolve(s"pid_${ProcessHandle.current.pid}")
-    java.nio.file.Files.createDirectories(mine)
-    val target = java.nio.file.Files.createTempDirectory(mine, "run").toString
+    val target = scratchTarget("/tmp/graft_topk_upsert")
     val stream = Tables.eventsStream(spark, dir)
       .withColumn("ts", col("ts").cast("timestamp"))
       .withWatermark("ts", AppendDelay)

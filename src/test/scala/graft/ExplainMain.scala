@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc plan dump (test scope): prints the executed plan of named queries.
   * Usage: Test/runMain graft.ExplainMain <sfDir> <query...>
   *
@@ -17,13 +15,7 @@ object ExplainMain {
     val names = if (args.length > 1) args.tail.toSeq else Seq("q40_cosine_topk")
     val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
     val planTag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "before")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session(8)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)

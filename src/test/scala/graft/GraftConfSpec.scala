@@ -1,7 +1,7 @@
 package graft
 
 /** The validated conf-parse seam: strategy confs fail LOUDLY with the conf
-  * name on a typo (the q138 ckptEvery discipline, repo-wide), defaults
+  * name on a typo (repo-wide), defaults
   * apply when unset, and valid values — including the deliberate
   * 0-forces-a-path harness levers — parse unchanged.
   */

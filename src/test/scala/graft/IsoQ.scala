@@ -1,23 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
-/** Scratch: time queries sequentially in one session (scale debugging). */
+/** Times queries sequentially in one session (scale debugging).
+  * Usage: Test/runMain graft.IsoQ <q1,q2,...> <sfDir> [cpus] [k=v,k=v] */
 object IsoQ {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",")
     val dir = args(1)
-    val cpus = if (args.length > 2) args(2) else "32"
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("graft.stream.statePartitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // optional 4th arg: comma-separated k=v session confs (VerifyOne's form)
-    if (args.length > 3 && args(3).nonEmpty)
-      args(3).split(",").foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)
-      }
+    val cpus = if (args.length > 2) args(2).toInt else 32
+    val confs = if (args.length > 3) Harness.parseConfs(args(3)) else Nil
+    val spark = Harness.session(cpus, confs: _*)
     names.foreach { name =>
       spark.catalog.clearCache(); System.gc()
       val t0 = System.nanoTime()

@@ -1,19 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
-/** Scratch runner: dump selected queries for a local oracle check. */
+/** Dumps selected queries for a local oracle check.
+  * Usage: Test/runMain graft.VerifyOne <q1,q2> [sfDir] [outDir] [k=v,k=v] */
 object VerifyOne {
   def main(a: Array[String]): Unit = {
     val names = a(0).split(",")
     val sfDir = if (a.length > 1) a(1) else "/root/testdata/sf0.01"
     val out = if (a.length > 2) a(2) else "/tmp/vone"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", false).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     // optional 4th arg: comma-separated k=v session confs (conf-gated forms)
-    if (a.length > 3) a(3).split(",").filter(_.contains("=")).foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)
-    }
+    val confs = if (a.length > 3) Harness.parseConfs(a(3)) else Nil
+    val spark = Harness.session(8, confs: _*)
+    spark.sparkContext.setLogLevel("ERROR")
     val sqls = scala.collection.mutable.LinkedHashMap[String, String]()
     names.foreach { n =>
       SparkEntry.queries(n)(spark, sfDir).write.mode("overwrite").parquet(s"$out/$n")
